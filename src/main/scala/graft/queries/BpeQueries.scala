@@ -81,47 +81,44 @@ object BpeQueries {
       .groupBy("word").agg(count(lit(1)).as("wc"))
       .orderBy(col("wc").desc, col("word")).limit(BpeW)
 
-  private val mergesMemo = new Clustering.Memo[(SparkSession, String)]
-
   /** The trained merge table (round, w1, w2, merged, cnt) — the model
     * artifact. Each round localCheckpoints the 1-row argmax and the
     * rewritten vocab so round r+1's plan starts from materialized
-    * state (the CC-loop convention); memoized per corpus fingerprint
-    * so the apply side (t51) never retrains. */
-  private[graft] def trainMerges(s: SparkSession, d: String): DataFrame = {
-    val key = (s, d)
-    val stamp = Clustering.fingerprint(d, "documents")
-    mergesMemo.reuse(key, stamp) {
-      var syms = wordCounts(s, d)
-        .select(col("word"), col("wc"), charSym(col("word")).as("sym"))
+    * state (the CC-loop convention); a standing artifact, so the apply
+    * side (t51) never retrains. */
+  private[graft] def trainMerges(s: SparkSession, d: String): DataFrame =
+    Standing.get(merges, s, d)
+
+  private val merges = Standing.declare[Unit, DataFrame](
+      "bpe-merges", "documents") { (s, d, _) =>
+    var syms = wordCounts(s, d)
+      .select(col("word"), col("wc"), charSym(col("word")).as("sym"))
+      .localCheckpoint()
+    val bests = (1 to BpeM).map { r =>
+      val arr = split(col("sym"), "  ")
+      val n = size(arr)
+      val prs = zip_with(
+        slice(arr, lit(1), greatest(n - 1, lit(0))),
+        slice(arr, lit(2), greatest(n - 1, lit(0))),
+        (a, b) => struct(a.as("w1"), b.as("w2")))
+      val best = syms.select(col("wc"), explode(prs).as("p"))
+        .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
+        .agg(sum("wc").as("cnt"))
+        .orderBy(col("cnt").desc, col("w1"), col("w2")).limit(1)
+        .select(lit(r).as("round"), col("w1"), col("w2"),
+          concat(col("w1"), col("w2")).as("merged"), col("cnt"))
         .localCheckpoint()
-      val bests = (1 to BpeM).map { r =>
-        val arr = split(col("sym"), "  ")
-        val n = size(arr)
-        val prs = zip_with(
-          slice(arr, lit(1), greatest(n - 1, lit(0))),
-          slice(arr, lit(2), greatest(n - 1, lit(0))),
-          (a, b) => struct(a.as("w1"), b.as("w2")))
-        val best = syms.select(col("wc"), explode(prs).as("p"))
-          .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-          .agg(sum("wc").as("cnt"))
-          .orderBy(col("cnt").desc, col("w1"), col("w2")).limit(1)
-          .select(lit(r).as("round"), col("w1"), col("w2"),
-            concat(col("w1"), col("w2")).as("merged"), col("cnt"))
-          .localCheckpoint()
-        syms = syms
-          .crossJoin(broadcast(best.select(
-            col("w1").as("__w1"), col("w2").as("__w2"),
-            col("merged").as("__m"))))
-          .select(col("word"), col("wc"),
-            applyMerge(col("sym"), col("__w1"), col("__w2"), col("__m"))
-              .as("sym"))
-          .localCheckpoint()
-        best
-      }
-      mergesMemo.record(key, stamp,
-        bests.reduce(_ union _).localCheckpoint())
+      syms = syms
+        .crossJoin(broadcast(best.select(
+          col("w1").as("__w1"), col("w2").as("__w2"),
+          col("merged").as("__m"))))
+        .select(col("word"), col("wc"),
+          applyMerge(col("sym"), col("__w1"), col("__w2"), col("__m"))
+            .as("sym"))
+        .localCheckpoint()
+      best
     }
+    bests.reduce(_ union _).localCheckpoint()
   }
 
   /** Oracle CTE chain: w0 (capped word counts), s0 (char split), per

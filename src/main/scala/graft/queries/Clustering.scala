@@ -1,13 +1,11 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Shared shapes for the cluster-resolution queries (t21/t26/t32/t35):
-  * the output frame and the build-once-reuse registry, factored so the
-  * lexical and semantic families cannot drift. */
+  * the output frame, factored so the lexical and semantic families
+  * cannot drift, and the checkpoint release the iterative loops use. */
 private[graft] object Clustering {
 
   /** (idName, cluster_id, cluster_size, is_keeper) from a CC label
@@ -19,64 +17,20 @@ private[graft] object Clustering {
         col("cluster_size"), (col("id") === col("label")).as("is_keeper"))
   }
 
-  /** Build-once-per-process registry: direct query runs always rebuild
-    * (scale/bench numbers stay honest) and `record` the checkpointed
-    * frame; composing consumers (t28, the parity gates) `reuse` it so
-    * a composition never pays the iterative CC loop twice.
-    *
-    * Entries are keyed by a stable PREFIX (session, dir, variant) with
-    * a [[fingerprint]] of the backing table(s) as a VALIDITY STAMP:
-    * `reuse` serves the recorded frame only while the stamp matches
-    * (an input dir rewritten in-process rebuilds instead of serving a
-    * stale checkpoint), and `record` RELEASES the previous entry's
-    * localCheckpoint blocks when it replaces one — whether from a
-    * corpus rewrite or a direct gate rerun — so a long-lived ingest
-    * process never accumulates dead checkpoint storage (ADVICE r14;
-    * the old fingerprint-in-key design kept every superseded frame
-    * pinned in the map forever). */
-  final class Memo[P] {
-    private val m = new ConcurrentHashMap[P, (String, DataFrame)]
-    def record(prefix: P, stamp: String, df: DataFrame): DataFrame = {
-      val old = m.put(prefix, (stamp, df))
-      if (old != null && !(old._2 eq df)) release(old._2)
-      df
-    }
-    def reuse(prefix: P, stamp: String)(build: => DataFrame): DataFrame =
-      Option(m.get(prefix)) match {
-        case Some((s, df)) if s == stamp => df
-        case _ => build
-      }
-  }
-
   /** Release the persisted blocks behind a localCheckpoint'ed frame:
     * the checkpointed Dataset's plan is a `LogicalRDD` over the
     * persisted internal RDD — unpersist that RDD. No-op (never a
-    * failure) for any other plan shape: callers may record frames that
+    * failure) for any other plan shape: callers may pass frames that
     * were never checkpointed, and releasing is an optimization, not a
     * correctness requirement. Deliberately non-blocking — the evicted
-    * blocks just become reclaimable. Shared with the iterative loops
-    * (GraphQueries, which checkpoints per power-iteration round) so
-    * every superseded-checkpoint release goes through one definition. */
+    * blocks just become reclaimable. Only for a loop's own superseded
+    * state (e.g. GraphQueries' per-round checkpoints), which nothing
+    * outside the loop can hold; standing artifacts are never released
+    * (see [[Standing]]). */
   private[graft] def release(df: DataFrame): Unit =
     try df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     } catch { case _: Throwable => () }
-
-  /** Content fingerprint of the parquet inputs behind a memoized frame:
-    * sorted (path, length, mtime) of every file under each table path.
-    * Cheap (directory metadata only — no data read) relative to the CC
-    * loop the memo guards, and exactly as stale-proof as the
-    * filesystem's mtime resolution. */
-  def fingerprint(dir: String, tables: String*): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Nil).flatMap(walk)
-      else Seq(f)
-    tables.flatMap(t => walk(new java.io.File(s"$dir/$t.parquet")))
-      .sortBy(_.getPath)
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
-      .mkString("|")
-  }
 }

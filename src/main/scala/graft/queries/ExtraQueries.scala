@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -334,33 +335,21 @@ object ExtraQueries {
        |  vec_id = cluster_id AS is_keeper
        |FROM cc
        |ORDER BY vec_id""".stripMargin) { (s, d) =>
-    buildSemanticClusters(s, d, star = false).orderBy("vec_id")
+    Standing.rebuild(semanticClusters, s, d, false).orderBy("vec_id")
   }
 
-  // keyed by (session, dir, star) with the embeddings.parquet
-  // fingerprint as the validity stamp — an in-process rewrite rebuilds,
-  // and each re-record releases the superseded checkpoint (ADVICE r14)
-  private val semanticMemo =
-    new Clustering.Memo[(org.apache.spark.sql.SparkSession, String, Boolean)]
-
-  /** Fresh semantic-cluster build (full or star edge feed), recorded
-    * for reuse — the TextQueries memo pattern: direct t26/t35 runs
-    * always rebuild (scale/bench numbers stay honest); the t36 parity
-    * gate composes on the recorded checkpoints. */
-  private def buildSemanticClusters(s: org.apache.spark.sql.SparkSession,
-      d: String, star: Boolean): org.apache.spark.sql.DataFrame = {
+  /** Semantic clusters (variant: full or star edge feed), a standing
+    * artifact: direct t26/t35 runs always rebuild (scale/bench numbers
+    * stay honest); the t36 parity gate composes on the recorded
+    * checkpoints. */
+  private val semanticClusters = Standing.declare[Boolean, DataFrame](
+      "semantic-clusters", "embeddings") { (s, d, star) =>
     val edges = (if (star) cosStarEdges(s, d)
                  else cosNearDupPairs(s, d)).select(col("d1"), col("d2"))
     val nodes = Tables.embeddings(s, d).select(col("vec_id").as("id"))
     val cc = graft.ops.ConnectedComponents.labels(edges, "d1", "d2", nodes, "id")
-    semanticMemo.record((s, d, star), Clustering.fingerprint(d, "embeddings"),
-      Clustering.frame(cc, "vec_id").localCheckpoint())
+    Clustering.frame(cc, "vec_id").localCheckpoint()
   }
-
-  private def semanticClustersReused(s: org.apache.spark.sql.SparkSession,
-      d: String, star: Boolean): org.apache.spark.sql.DataFrame =
-    semanticMemo.reuse((s, d, star), Clustering.fingerprint(d, "embeddings"))(
-      buildSemanticClusters(s, d, star))
 
   /** T35 — semantic clusters over the STAR edge feed: t32's
     * linear-edge formulation applied to the cosine family, where it
@@ -388,7 +377,7 @@ object ExtraQueries {
        |  vec_id = cluster_id AS is_keeper
        |FROM cc
        |ORDER BY vec_id""".stripMargin) { (s, d) =>
-    buildSemanticClusters(s, d, star = true).orderBy("vec_id")
+    Standing.rebuild(semanticClusters, s, d, true).orderBy("vec_id")
   }
 
   /** T36 — star-vs-full SEMANTIC parity gate (t33's shape for the
@@ -425,9 +414,9 @@ object ExtraQueries {
        |  COUNT(DISTINCT f.cluster_id) AS n_clusters_full,
        |  COUNT(DISTINCT s.cluster_id) AS n_clusters_star
        |FROM cc_f f JOIN cc_s s ON f.node = s.node""".stripMargin) { (s, d) =>
-    val full = semanticClustersReused(s, d, star = false)
+    val full = Standing.get(semanticClusters, s, d, false)
       .select(col("vec_id"), col("cluster_id").as("cf"))
-    val star = semanticClustersReused(s, d, star = true)
+    val star = Standing.get(semanticClusters, s, d, true)
       .select(col("vec_id"), col("cluster_id").as("cs"))
     full.join(star, "vec_id")
       .agg(count(lit(1)).as("n_vecs"),

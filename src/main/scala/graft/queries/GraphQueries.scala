@@ -95,29 +95,17 @@ object GraphQueries {
     val pairs =
       (if (star) TextQueries.nearDupStarEdgesOfToks(toks)
        else TextQueries.nearDupPairsOfToks(toks)).select("d1", "d2")
-    // co-partitioned loop state (r21, guide §2.4 — the r20
-    // ConnectedComponents discipline): edges checkpoint under an
-    // explicit hash(src); hash(src) also feeds the deg groupBy below,
-    // and every round's edge⋈state probe joins on src — so the rounds
-    // start co-partitioned instead of re-shuffling the edge frame
-    // [[Iters]] times.
     val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .repartition(col("src"))
       .localCheckpoint()
     val seeds = toks.select(col("doc_id"),
       (size(array_distinct(col("toks"))).cast("long") * Scale)
         .as("seed_s"))
     val deg = edges.groupBy(col("src").as("doc_id"))
       .agg(count(lit(1)).as("deg"))
-    // base checkpoints under hash(doc_id): the per-round state join
-    // (base ⋈ neighbor-sums) and the final projection join both key on
-    // doc_id, and the groupBy(dst) aggregate lands on the same hash —
-    // one exchange per round (the dst sum), nothing else.
     val base = seeds.join(deg, Seq("doc_id"), "left")
       .select(col("doc_id"), col("seed_s"),
         coalesce(col("deg"), lit(0L)).as("deg"))
-      .repartition(col("doc_id"))
       .localCheckpoint()
     (edges, base)
   }

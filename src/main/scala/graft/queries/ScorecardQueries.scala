@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each component is already source-grained — the join is
   * three ~20-row frames (broadcast by AQE), costing nothing beyond the
-  * component scans themselves (t66 rides the memoized manifest frames;
-  * t63's merges table is memoized; the HLL side is one scan). The
+  * component scans themselves (t66 rides the standing cluster frames;
+  * t63's merges table is standing; the HLL side is one scan). The
   * sketch column comes via [[SketchQueries.hllSourceEst]] — the SAME
   * register build + estimate arithmetic as the t62 gate (one factored
   * helper, no drift possible) WITHOUT t62's corpus-wide `exact_n`

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -332,62 +332,33 @@ object TextQueries {
        |  doc_id = cluster_id AS is_keeper
        |FROM cc
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    buildDupClusters(s, d).orderBy("doc_id")
+    Standing.rebuild(dupClusters, s, d).orderBy("doc_id")
   }
 
-  /** t21's cluster frame, built fresh and recorded for reuse. The CC
-    * loop executes EAGERLY (localCheckpoint per round), so any second
-    * build in the same process — t28 composing on a t21 that already
-    * ran — would pay the whole iterative clustering again; the final
-    * checkpoint makes reuse a block read instead. On a cluster the
-    * same contract is "materialize the cluster table once, join
-    * downstream consumers against it", not a per-query rebuild. */
-  // entries are keyed by (session, dir) with a Clustering.fingerprint
-  // of documents.parquet as the validity stamp — an in-process rewrite
-  // of the dir rebuilds (never serves stale), and each re-record
-  // releases the superseded checkpoint's blocks (ADVICE r14)
-  private val dupClustersMemo =
-    new Clustering.Memo[(org.apache.spark.sql.SparkSession, String)]
-
-  private def docsPrefix(s: org.apache.spark.sql.SparkSession, d: String) =
-    (s, d)
-  private def docsStamp(d: String) = Clustering.fingerprint(d, "documents")
-
-  private def buildDupClusters(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
+  /** t21's cluster frame, a standing artifact. The CC loop executes
+    * EAGERLY (localCheckpoint per round), so any second build in the
+    * same process — t28 composing on a t21 that already ran — would
+    * pay the whole iterative clustering again; the final checkpoint
+    * makes reuse a block read instead. On a cluster the same contract
+    * is "materialize the cluster table once, join downstream consumers
+    * against it", not a per-query rebuild. */
+  private val dupClusters = Standing.declare[Unit, DataFrame](
+      "dup-clusters", "documents") { (s, d, _) =>
     val edges = nearDupPairs(s, d).select(col("d1"), col("d2"))
     val nodes = Tables.documents(s, d).select(col("doc_id").as("id"))
     val cc = graft.ops.ConnectedComponents.labels(edges, "d1", "d2", nodes, "id")
-    dupClustersMemo.record(docsPrefix(s, d), docsStamp(d),
-      Clustering.frame(cc, "doc_id").localCheckpoint())
+    Clustering.frame(cc, "doc_id").localCheckpoint()
   }
 
-  /** The reuse path consumers compose on: the recorded frame if this
-    * process already built t21 for (session, dir, fingerprint), else a
-    * fresh build. */
-  private def dupClustersReused(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    dupClustersMemo.reuse(docsPrefix(s, d), docsStamp(d))(buildDupClusters(s, d))
-
-  private val starClustersMemo =
-    new Clustering.Memo[(org.apache.spark.sql.SparkSession, String)]
-
-  /** Fresh star-edge cluster build, recorded for reuse — mirrors
-    * [[buildDupClusters]]: direct t32 runs always rebuild (bench/scale
-    * numbers stay honest), composing consumers (t33) read the recorded
-    * checkpoint. */
-  private def buildStarClusters(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
+  /** The star-edge twin of [[dupClusters]]; t32 builds it, t33 and the
+    * manifest queries compose on it. */
+  private val starClusters = Standing.declare[Unit, DataFrame](
+      "star-clusters", "documents") { (s, d, _) =>
     val edges = nearDupStarEdgesOf(Tables.documents(s, d))
     val nodes = Tables.documents(s, d).select(col("doc_id").as("id"))
     val cc = graft.ops.ConnectedComponents.labels(edges, "d1", "d2", nodes, "id")
-    starClustersMemo.record(docsPrefix(s, d), docsStamp(d),
-      Clustering.frame(cc, "doc_id").localCheckpoint())
+    Clustering.frame(cc, "doc_id").localCheckpoint()
   }
-
-  private def starClustersReused(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    starClustersMemo.reuse(docsPrefix(s, d), docsStamp(d))(buildStarClusters(s, d))
 
   /** T32 — near-dup clusters over the STAR edge feed: the
     * linear-in-duplication-depth variant of t21. The ×100 scale run
@@ -422,7 +393,7 @@ object TextQueries {
        |  doc_id = cluster_id AS is_keeper
        |FROM cc
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    buildStarClusters(s, d).orderBy("doc_id")
+    Standing.rebuild(starClusters, s, d).orderBy("doc_id")
   }
 
   /** T33 — star-vs-full clustering PARITY gate (the t30 idea applied
@@ -432,9 +403,8 @@ object TextQueries {
     * is a refinement — n_agree ≤ n_docs and n_clusters_star ≥
     * n_clusters_full always; the gate pins the measured split cost at
     * the committed operating point so a K/R/B retune that degrades the
-    * star feed flips this row. Both sides reuse the per-process
-    * memoized cluster frames, so the gate adds two joins, not two CC
-    * loops. */
+    * star feed flips this row. Both sides read the standing cluster
+    * frames, so the gate adds two joins, not two CC loops. */
   val t33StarParity: QuerySpec = QuerySpec.sql(
     "t33_star_parity",
     s"""WITH RECURSIVE $NearDupPairsCtesSql,
@@ -465,9 +435,9 @@ object TextQueries {
        |  COUNT(DISTINCT f.cluster_id) AS n_clusters_full,
        |  COUNT(DISTINCT s.cluster_id) AS n_clusters_star
        |FROM cc_f f JOIN cc_s s ON f.node = s.node""".stripMargin) { (s, d) =>
-    val full = dupClustersReused(s, d)
+    val full = Standing.get(dupClusters, s, d)
       .select(col("doc_id"), col("cluster_id").as("cf"))
-    val star = starClustersReused(s, d)
+    val star = Standing.get(starClusters, s, d)
       .select(col("doc_id"), col("cluster_id").as("cs"))
     full.join(star, "doc_id")
       .agg(count(lit(1)).as("n_docs"),
@@ -515,17 +485,14 @@ object TextQueries {
        |  doc_id = cluster_id AS is_keeper
        |FROM fin
        |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    buildRepDedup(s, d).orderBy("doc_id")
+    Standing.rebuild(repDedup, s, d).orderBy("doc_id")
   }
 
-  private val repDedupMemo =
-    new Clustering.Memo[(org.apache.spark.sql.SparkSession, String)]
-
-  /** Fresh t34 rep-collapsed cluster build, recorded for reuse — the
-    * [[buildDupClusters]] pattern: direct t34 runs always rebuild,
-    * composing consumers (t28) read the recorded checkpoint. */
-  private def buildRepDedup(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
+  /** t34's rep-collapsed cluster frame, a standing artifact: direct
+    * t34 runs always rebuild, composing consumers (t28) read the
+    * recorded checkpoint. */
+  private val repDedup = Standing.declare[Unit, DataFrame](
+      "rep-dedup", "documents") { (s, d, _) =>
     val docs = Tables.documents(s, d)
     // checkpoint: chash feeds dk's both sides AND the reps screen — the
     // full-text normalize+md5 scan must run once, not three times
@@ -541,16 +508,11 @@ object TextQueries {
       cc.select(col("id").as("keeper"), col("label").as("cluster_id")),
       "keeper")
     val sized = fin.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    repDedupMemo.record(docsPrefix(s, d), docsStamp(d),
-      fin.join(sized, "cluster_id")
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-          (col("doc_id") === col("cluster_id")).as("is_keeper"))
-        .localCheckpoint())
+    fin.join(sized, "cluster_id")
+      .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
+        (col("doc_id") === col("cluster_id")).as("is_keeper"))
+      .localCheckpoint()
   }
-
-  private def repDedupReused(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    repDedupMemo.reuse(docsPrefix(s, d), docsStamp(d))(buildRepDedup(s, d))
 
   /** T31b — the SimHash near-dup SCALE operating point (the t10b
     * lesson applied to the third near-dup family): t31's 32-bit
@@ -2656,7 +2618,7 @@ object TextQueries {
     * joining the quality verdict (t19), the near-dup cluster keeper
     * flag and the deterministic split (t15) into the final include
     * decision a curation pipeline materializes. The cluster side
-    * composes the REP-COLLAPSED frame ([[repDedupReused]], t34's
+    * composes the REP-COLLAPSED frame ([[repDedup]], t34's
     * production order: exact-collapse → near-dup over representatives →
     * map back) — the ×100 scale run killed the full-pair t21
     * composition this manifest originally used, while t34's feed stays
@@ -2676,7 +2638,7 @@ object TextQueries {
        |ORDER BY q.doc_id""".stripMargin) { (s, d) =>
     t19CurationVerdict.run(s, d)
       .select(col("doc_id"), col("keep"), col("drop_reason"))
-      .join(repDedupReused(s, d)
+      .join(Standing.get(repDedup, s, d)
         .select(col("doc_id"), col("cluster_id"), col("is_keeper")), "doc_id")
       .join(t15HashSplit.run(s, d).select(col("doc_id"), col("split")), "doc_id")
       .select(col("doc_id"), col("keep"), col("drop_reason"),
@@ -2708,7 +2670,7 @@ object TextQueries {
        |ORDER BY q.doc_id""".stripMargin) { (s, d) =>
     t19CurationVerdict.run(s, d)
       .select(col("doc_id"), col("keep"), col("drop_reason"))
-      .join(starClustersReused(s, d)
+      .join(Standing.get(starClusters, s, d)
         .select(col("doc_id"), col("cluster_id"), col("is_keeper")), "doc_id")
       .join(t15HashSplit.run(s, d).select(col("doc_id"), col("split")), "doc_id")
       .select(col("doc_id"), col("keep"), col("drop_reason"),
@@ -2723,8 +2685,8 @@ object TextQueries {
     * dedup collapse), plus the train-split yield. This is the number a
     * data lead reads to decide which sources to renegotiate, re-crawl,
     * or drop; computed by rolling the t28b manifest (star-clustered,
-    * the production composition) up by source. Composition reuses the
-    * memoized component frames exactly as t28b does, so the report and
+    * the production composition) up by source. Composition reads the
+    * standing cluster frames exactly as t28b does, so the report and
     * the manifest can never disagree; the oracle embeds t28b's oracle
     * as a subquery (the established x8 pattern). Scale: the manifest
     * is one row per doc; the rollup adds one broadcast-joinable
@@ -2753,7 +2715,7 @@ object TextQueries {
        |ORDER BY source""".stripMargin) { (s, d) =>
     val m = t19CurationVerdict.run(s, d)
       .select(col("doc_id"), col("keep"))
-      .join(starClustersReused(s, d)
+      .join(Standing.get(starClusters, s, d)
         .select(col("doc_id"), col("is_keeper")), "doc_id")
       .join(t15HashSplit.run(s, d).select(col("doc_id"), col("split")),
         "doc_id")
@@ -2972,23 +2934,14 @@ object TextQueries {
        |  CAST(fp.h AS BIGINT) AS h
        |FROM f""".stripMargin
 
-  // the winnow family's shared-scan memos (the buildDupClusters
-  // discipline): a direct t60 run always rebuilds + records the
-  // fingerprint frame (bench/scale numbers stay honest); the pair
-  // queries (t61/t61b) compose on the recorded checkpoint, so across
-  // the family the tokenize+shingle+hash scan is paid ONCE per
-  // process, not once per query. Keys carry the documents.parquet
-  // content fingerprint, so an in-process rewrite invalidates.
-  private val winnowFpMemo =
-    new Clustering.Memo[(org.apache.spark.sql.SparkSession, String)]
-  private val winnowDocHashMemo =
-    new Clustering.Memo[(org.apache.spark.sql.SparkSession, String)]
-
-  /** Fresh winnowed-fingerprint build (the t60 body, ORDER-BY-free),
-    * recorded for reuse and checkpointed — the frame is ~1/(W/2) of
-    * the shingle mass, far smaller than the scan that produces it. */
-  private def buildWinnowFp(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
+  /** The winnowed-fingerprint frame (the t60 body, ORDER-BY-free), a
+    * standing artifact: a direct t60 run always rebuilds it, the pair
+    * queries (t61/t61b) compose on it, so across the family the
+    * tokenize+shingle+hash scan is paid ONCE per process. Checkpointed
+    * — the frame is ~1/(W/2) of the shingle mass, far smaller than the
+    * scan that produces it. */
+  private val winnowFp = Standing.declare[Unit, DataFrame](
+      "winnow-fp", "documents") { (s, d, _) =>
     val hs = transform(shingles(tokens(col("text")), 3),
       x => SketchQueries.baseHash(x))
     // rightmost-min tie rule, CODEGEN form (r21, VERDICT r20 item 3):
@@ -3002,38 +2955,30 @@ object TextQueries {
     // scan with `h ≤ best` updates; empty-shingle docs yield an empty
     // array ≡ the former filter(nw > 0)), so t60/t61/t61b outputs are
     // bit-identical — WinnowExprSpec pins the equivalence.
-    winnowFpMemo.record(docsPrefix(s, d), docsStamp(d),
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(call_function("winnow_min_windows", hs, lit(WinnowW)))
-            .as("fp"))
-        .select(col("doc_id"), col("fp.pos").as("pos"), col("fp.h").as("h"))
-        .distinct()
-        .localCheckpoint()) // one winnowing scan serves t60/t61/t61b
+    Tables.documents(s, d)
+      .select(col("doc_id"),
+        explode(call_function("winnow_min_windows", hs, lit(WinnowW)))
+          .as("fp"))
+      .select(col("doc_id"), col("fp.pos").as("pos"), col("fp.h").as("h"))
+      .distinct()
+      .localCheckpoint() // one winnowing scan serves t60/t61/t61b
   }
 
-  private def winnowFpReused(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    winnowFpMemo.reuse(docsPrefix(s, d), docsStamp(d))(buildWinnowFp(s, d))
-
   /** The (doc_id, h)-distinct projection both pair queries self-join
-    * on, checkpointed once (first caller builds, the other reuses —
-    * the pqCodebookMemo pattern; the build reads the checkpointed
-    * pos-level frame, not the corpus). */
-  private def winnowDocHash(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    winnowDocHashMemo.reuse(docsPrefix(s, d), docsStamp(d)) {
-      winnowDocHashMemo.record(docsPrefix(s, d), docsStamp(d),
-        winnowFpReused(s, d)
-          .select("doc_id", "h").distinct()
-          .localCheckpoint()) // one winnowing pass: df screen + both sides
-    }
+    * on, checkpointed once (first caller builds, the other reuses; the
+    * build reads the standing pos-level frame, not the corpus). */
+  private val winnowDocHash = Standing.declare[Unit, DataFrame](
+      "winnow-doc-hash", "documents") { (s, d, _) =>
+    Standing.get(winnowFp, s, d)
+      .select("doc_id", "h").distinct()
+      .localCheckpoint() // one winnowing pass: df screen + both sides
+  }
 
   val t60Winnowing: QuerySpec = QuerySpec.sql(
     "t60_winnowing",
     s"""$winnowFpSql
        |ORDER BY doc_id, pos, h""".stripMargin) { (s, d) =>
-    buildWinnowFp(s, d).orderBy("doc_id", "pos", "h")
+    Standing.rebuild(winnowFp, s, d).orderBy("doc_id", "pos", "h")
   }
 
   /** Winnowing-pair thresholds: hashes seen in more than [[WinnowDfCap]]
@@ -3077,7 +3022,7 @@ object TextQueries {
        |SELECT d1, d2, n_shared FROM p
        |WHERE n_shared >= $WinnowMinShared
        |ORDER BY d1, d2""".stripMargin) { (s, d) =>
-    val fp = winnowDocHash(s, d)
+    val fp = Standing.get(winnowDocHash, s, d)
     val dfc = fp.groupBy("h").agg(count(lit(1)).as("nd"))
     val rare = fp.join(dfc.filter(col("nd") <= WinnowDfCap), "h")
     rare.as("a")
@@ -3154,7 +3099,7 @@ object TextQueries {
        |SELECT d1, d2, n_shared FROM p
        |WHERE n_shared >= $WinnowMinShared
        |ORDER BY d1, d2""".stripMargin) { (s, d) =>
-    val fp = winnowDocHash(s, d)
+    val fp = Standing.get(winnowDocHash, s, d)
     val dfc = fp.groupBy("h").agg(count(lit(1)).as("nd"))
       .localCheckpoint() // cap derivation + the rare screen share it
     val budget = WinnowPairBudget * Tables.documents(s, d).count()

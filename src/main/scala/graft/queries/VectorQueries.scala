@@ -594,68 +594,42 @@ object VectorQueries {
        |$roundCtes""".stripMargin
   }
 
-  // ---- standing-artifact memos (r20 — the dupClustersMemo/winnowFpMemo
-  // pattern applied to the graph family). PRODUCTION SEMANTICS: the
-  // k-NN graph is built ONCE at curation time and every serve/CRUD op
-  // composes on the standing artifact (t83's scaladoc; DiskANN's whole
-  // design) — before r20 each gate rebuilt it in-process, paying the
-  // LSH seed + NN-Descent rounds five times per pass. Discipline is
-  // buildDupClusters': the BUILDER gates (t82/t82b/t82c, whose output
-  // IS the graph) always rebuild and re-record, so their bench numbers
-  // stay honest; the composing gates (t83 serve, t85 routed serve,
-  // t86 delete, t87 PQ serve, t88 consolidate) reuse the recorded
-  // checkpoint exactly as t28/t33 reuse t21's clusters. Keys carry the
-  // embeddings.parquet content fingerprint — an in-process rewrite
-  // rebuilds, never serves stale; record releases superseded blocks.
-  // t84 keeps a direct build: its base-SUBSET graph has no other
-  // consumer, so a memo there would cache the gate's own work rather
-  // than share a standing artifact.
-
-  private val embMemo = new Clustering.Memo[(SparkSession, String)]
-  private def embStamp(d: String) = Clustering.fingerprint(d, "embeddings")
-
-  /** Memoized corpus row count off the checkpointed scan (r21) — every
-    * graph/serve gate needs it for the broadcast-regime decision and
-    * the seed fill's modulus, and each `e.count()` is its own Spark
-    * job (~50 ms of scheduler latency per gate call). Fingerprint-
-    * stamped like every memo; the count is corpus metadata, not a
-    * query result. */
-  private val embCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (String, java.lang.Long)]
-  private def embCount(s: SparkSession, d: String): Long = {
-    val k = (s, d)
-    val st = embStamp(d)
-    val cur = embCountMemo.get(k)
-    if (cur != null && cur._1 == st) cur._2
-    else {
-      val n = embCheckpointed(s, d).count()
-      embCountMemo.put(k, (st, java.lang.Long.valueOf(n)))
-      n
-    }
-  }
+  // ---- standing artifacts of the graph family. PRODUCTION SEMANTICS:
+  // the k-NN graph is built ONCE at curation time and every serve/CRUD
+  // op composes on the standing artifact (t83's scaladoc; DiskANN's
+  // whole design). The BUILDER gates (t82/t82b/t82c, whose output IS
+  // the graph) always rebuild, so their bench numbers stay honest; the
+  // composing gates (t83 serve, t85 routed serve, t86 delete, t87 PQ
+  // serve, t88 consolidate) read the recorded checkpoint exactly as
+  // t28/t33 read t21's clusters. t84 keeps a direct build: its
+  // base-SUBSET graph has no other consumer, so a standing artifact
+  // there would cache the gate's own work rather than share one.
 
   /** The checkpointed (vec_id, embedding, eL, ss) corpus every graph
     * gate fetches vectors from — scan+scale paid once per process per
-    * corpus fingerprint (first caller builds, the winnowDocHash
-    * discipline; the frame is corpus-resident by the same argument as
+    * corpus (the frame is corpus-resident by the same argument as
     * [[VecBroadcastMaxRows]]). */
-  private def embCheckpointed(s: SparkSession, d: String): DataFrame =
-    embMemo.reuse((s, d), embStamp(d)) {
-      embMemo.record((s, d), embStamp(d), embScaled(s, d).localCheckpoint())
-    }
+  private val embCorpus = Standing.declare[Unit, DataFrame](
+      "emb-corpus", "embeddings") { (s, d, _) =>
+    embScaled(s, d).localCheckpoint()
+  }
 
-  private val graphMemo = new Clustering.Memo[(SparkSession, String)]
-  private def graphKey(d: String, bits: Int, tables: Int, cap: Int,
-      fill: Boolean) = s"$d|$bits:$tables:$cap:$fill"
+  /** Corpus row count off the checkpointed scan — every graph/serve
+    * gate needs it for the broadcast-regime decision and the seed
+    * fill's modulus, and each `e.count()` is its own Spark job (~50 ms
+    * of scheduler latency per gate call). */
+  private val embCount = Standing.declare[Unit, Long](
+      "emb-count", "embeddings") { (s, d, _) =>
+    Standing.get(embCorpus, s, d).count()
+  }
 
   /** One graph build (LSH seed [+ fill] + NN-Descent) over `e`.
     * Seed pairs come RAW ([[annLshPairsRaw]] — round 0's dedupByQid
     * dedups them under the qid repartition it pays anyway, so the
     * former (qid, nid) seed aggregate was a redundant exchange);
     * `corpusRows` pre-answers the count the fill modulus and the
-    * broadcast regime need (one memoized job instead of two per
-    * build). */
+    * broadcast regime need (one standing count instead of two jobs
+    * per build). */
   private def buildKnnGraph(e: DataFrame, bits: Int, tables: Int,
       cap: Int, fill: Boolean, corpusRows: Option[Long] = None): DataFrame = {
     val n = Some(corpusRows.getOrElse(e.count()))
@@ -670,21 +644,16 @@ object VectorQueries {
     g
   }
 
-  /** Fresh standing-graph build at a config, recorded for reuse —
-    * the builder-gate entry (always rebuilds). */
-  private def standingGraphRecord(s: SparkSession, d: String, bits: Int,
-      tables: Int, cap: Int, fill: Boolean): DataFrame =
-    graphMemo.record((s, graphKey(d, bits, tables, cap, fill)), embStamp(d),
-      buildKnnGraph(embCheckpointed(s, d), bits, tables, cap, fill,
-        Some(embCount(s, d))))
+  /** The standing k-NN graph; the variant is the build config
+    * (LSH bits, tables, bucket cap, seed fill). */
+  private val knnGraph = Standing.declare[(Int, Int, Int, Boolean), DataFrame](
+      "knn-graph", "embeddings") { case (s, d, (bits, tables, cap, fill)) =>
+    buildKnnGraph(Standing.get(embCorpus, s, d), bits, tables, cap, fill,
+      Some(Standing.get(embCount, s, d)))
+  }
 
-  /** The composing-gate entry: the recorded standing graph if this
-    * process already built it at this config and fingerprint, else a
-    * fresh recorded build. */
-  private def standingGraphReused(s: SparkSession, d: String, bits: Int,
-      tables: Int, cap: Int, fill: Boolean): DataFrame =
-    graphMemo.reuse((s, graphKey(d, bits, tables, cap, fill)), embStamp(d))(
-      standingGraphRecord(s, d, bits, tables, cap, fill))
+  /** The filled 12-bit graph (t82c's) every composing gate serves on. */
+  private val FilledGraph = (12, 4, LshBucketCap, true)
 
   private def knnGraphSpec(name: String, bits: Int, tables: Int,
       cap: Int, fill: Boolean = false): QuerySpec =
@@ -694,7 +663,7 @@ object VectorQueries {
          |SELECT qid, CAST(rnk AS BIGINT) AS rank, nid, cosine
          |FROM g$KnnRounds
          |ORDER BY qid, rank""".stripMargin) { (s, d) =>
-      standingGraphRecord(s, d, bits, tables, cap, fill)
+      Standing.rebuild(knnGraph, s, d, (bits, tables, cap, fill))
         .select("qid", "rank", "nid", "cosine")
         .orderBy("qid", "rank")
     }
@@ -919,14 +888,14 @@ object VectorQueries {
          |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid, cosine
          |FROM gs$ServeRounds WHERE rnk <= $ServeK
          |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      val e = embCheckpointed(s, d)
-      val edges = standingGraphReused(s, d, LshBits, LshTables,
-        LshBucketCap, fill = false).select("qid", "nid")
+      val e = Standing.get(embCorpus, s, d)
+      val edges = Standing.get(knnGraph, s, d,
+        (LshBits, LshTables, LshBucketCap, false)).select("qid", "nid")
       val qids = e.select(col("vec_id").as("qid")).filter(col("qid") < 10)
       val ents = e.select(col("vec_id").as("nid"))
         .orderBy("nid").limit(ServeEntries)
       knnServeFrom(e, edges, qids, ents, ServeBeam, ServeRounds, ServeK,
-          corpusRows = Some(embCount(s, d)))
+          corpusRows = Some(Standing.get(embCount, s, d)))
         .select(col("qid").as("query_id"), col("rank"), col("nid"),
           col("cosine"))
         .orderBy("query_id", "rank")
@@ -986,8 +955,8 @@ object VectorQueries {
        |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid, cosine
        |FROM gs$ServeRounds WHERE rnk <= $ServeK
        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    val e = embCheckpointed(s, d)
-    val g = standingGraphReused(s, d, 12, 4, LshBucketCap, fill = true)
+    val e = Standing.get(embCorpus, s, d)
+    val g = Standing.get(knnGraph, s, d, FilledGraph)
     val queries = e.filter(col("vec_id") < 10)
     val routed = annLshEntries(e.select("vec_id", "embedding"),
       queries.select("vec_id", "embedding"), 12, 4, LshBucketCap,
@@ -998,7 +967,7 @@ object VectorQueries {
       .orderBy("nid").limit(ServeEntries)
     knnServeVecs(e, g.select("qid", "nid"), qvecs, ents,
         ServeBeam, ServeRounds, ServeK, routed = Some(routed),
-        corpusRows = Some(embCount(s, d)))
+        corpusRows = Some(Standing.get(embCount, s, d)))
       .select(col("qid").as("query_id"), col("rank"), col("nid"),
         col("cosine"))
       .orderBy("query_id", "rank")
@@ -1140,14 +1109,14 @@ object VectorQueries {
          |UNION ALL
          |SELECT qid, CAST(rnk AS BIGINT) AS rank, nid, cosine FROM fwd
          |ORDER BY qid, rank""".stripMargin) { (s, d) =>
-      // e via the shared memo; the base-SUBSET graph stays a direct
-      // per-gate build — no other consumer, so a memo would cache the
-      // gate's own work rather than share a standing artifact. The
+      // e is the standing corpus; the base-SUBSET graph stays a direct
+      // per-gate build — no other consumer, so a standing artifact
+      // would cache the gate's own work rather than share one. The
       // build's EAGER jobs are labeled (VERDICT r20 item 6) so a
       // QTIME_JOBS trace attributes build vs insert-walk wall; the
       // ambient description is restored before the walk so the timed
       // action's jobs keep the caller's label.
-      val e = embCheckpointed(s, d)
+      val e = Standing.get(embCorpus, s, d)
       val sc0 = s.sparkContext
       val prevDesc = sc0.getLocalProperty("spark.job.description")
       sc0.setJobDescription("t84: base-subset graph build")
@@ -1173,7 +1142,7 @@ object VectorQueries {
           .select("vec_id", "embedding"),
         12, 4, LshBucketCap, RouteEntries)
       graphInsert(e, g, newVecs, ents, KnnK, routed = Some(routed),
-          corpusRows = Some(embCount(s, d)))
+          corpusRows = Some(Standing.get(embCount, s, d)))
         .select("qid", "rank", "nid", "cosine")
         .orderBy("qid", "rank")
     }
@@ -1287,10 +1256,11 @@ object VectorQueries {
        |$graphDeleteCtesSql
        |SELECT qid, CAST(rnk AS BIGINT) AS rank, nid, cosine FROM pd
        |ORDER BY qid, rank""".stripMargin) { (s, d) =>
-    val e = embCheckpointed(s, d)
-    val g = standingGraphReused(s, d, 12, 4, LshBucketCap, fill = true)
+    val e = Standing.get(embCorpus, s, d)
+    val g = Standing.get(knnGraph, s, d, FilledGraph)
     val dels = e.filter(col("vec_id") < InsertNewMax).select("vec_id")
-    graphDelete(e, g, dels, KnnK, corpusRows = Some(embCount(s, d)))
+    graphDelete(e, g, dels, KnnK,
+        corpusRows = Some(Standing.get(embCount, s, d)))
       .select("qid", "rank", "nid", "cosine")
       .orderBy("qid", "rank")
   }
@@ -1406,8 +1376,8 @@ object VectorQueries {
        |UNION ALL
        |SELECT qid, CAST(rnk AS BIGINT) AS rank, nid, cosine FROM gcc
        |ORDER BY qid, rank""".stripMargin) { (s, d) =>
-    val e = embCheckpointed(s, d)
-    val g = standingGraphReused(s, d, 12, 4, LshBucketCap, fill = true)
+    val e = Standing.get(embCorpus, s, d)
+    val g = Standing.get(knnGraph, s, d, FilledGraph)
     // the surgical del set: node 0's out-neighbors and THEIR
     // out-neighbors (never 0 itself) — kills 0's whole repair pool
     val n1 = g.filter(col("qid") === 0L).select(col("nid").as("vec_id"))
@@ -1417,14 +1387,14 @@ object VectorQueries {
     val dels = n1.union(n2).filter(col("vec_id") =!= 0L).distinct()
       .localCheckpoint() // read by delete (5×) and the live-corpus anti
     val pd = graphDelete(e, g, dels, KnnK,
-      corpusRows = Some(embCount(s, d)), materialize = true)
+      corpusRows = Some(Standing.get(embCount, s, d)), materialize = true)
     val eLive = e.join(dels.select(col("vec_id").as("d")),
       col("vec_id") === col("d"), "left_anti")
     // live count = corpus − deletions (dels ⊆ corpus ids, distinct,
     // checkpointed): a cheap count of the tiny delete set instead of
     // running the live anti-join once more just to count it
     graphConsolidate(eLive, pd, KnnK,
-        corpusRows = Some(embCount(s, d) - dels.count()))
+        corpusRows = Some(Standing.get(embCount, s, d) - dels.count()))
       .select("qid", "rank", "nid", "cosine")
       .orderBy("qid", "rank")
   }
@@ -2141,54 +2111,33 @@ object VectorQueries {
     * the `sub` key rides every stage, so M codebooks cost the
     * per-round jobs of one). The result is M·k rows —
     * broadcast-sized at ANY corpus scale (a codebook is a model, not
-    * data) — and MEMOIZED per corpus version like the cluster frames:
-    * production trains once per corpus, every encode/ADC consumer
-    * reuses; the fingerprint key invalidates on any rewrite of the
-    * backing parquet. */
-  private val pqCodebookMemo =
-    new Clustering.Memo[(SparkSession, String)]
+    * data) — and a standing artifact: production trains once per
+    * corpus, every encode/ADC consumer reuses. */
+  private val pqCodebook = Standing.declare[Unit, DataFrame](
+      "pq-codebook", "embeddings") { (s, d, _) =>
+    graft.ops.KMeans.fitCentroidsGrouped(
+      pqSubvecs(embL(s, d)).withColumnRenamed("sv", "eL"), PqK, PqIters)
+      .localCheckpoint()
+  }
 
-  private def pqCodebook(s: SparkSession, d: String,
-      emb: DataFrame): DataFrame =
-    pqCodebookMemo.reuse((s, d), Clustering.fingerprint(d, "embeddings")) {
-      pqCodebookMemo.record(
-        (s, d), Clustering.fingerprint(d, "embeddings"),
-        graft.ops.KMeans.fitCentroidsGrouped(
-          pqSubvecs(emb).withColumnRenamed("sv", "eL"), PqK, PqIters)
-          .localCheckpoint())
-    }
+  // Standing PQ codes: production encodes the corpus ONCE at curation
+  // time and every ADC consumer reads the resident codes (FAISS IVFADC
+  // / DiskANN both deploy this way). The BUILDER gate t44 (its output
+  // IS the code table) always rebuilds, so its bench number stays
+  // honest; composers (t45/t46/t47/t87) read the recorded checkpoint.
 
-  // Standing PQ codes (r21 — the standingGraph/pqCodebook discipline
-  // one artifact further): production encodes the corpus ONCE at
-  // curation time and every ADC consumer reads the resident codes
-  // (FAISS IVFADC / DiskANN both deploy this way); before r21 each of
-  // t45/t46/t47/t87 re-encoded the full corpus per call. The BUILDER
-  // gate t44 (its output IS the code table) always rebuilds and
-  // re-records, so its bench number stays honest; composers reuse the
-  // recorded checkpoint. Keys carry the embeddings fingerprint —
-  // in-process rewrites rebuild, never serve stale.
-  private val pqEncMemo = new Clustering.Memo[(SparkSession, String)]
-  private val pqPackedMemo = new Clustering.Memo[(SparkSession, String)]
+  /** The full-corpus long-form codes (vec_id, sub, code, dq). */
+  private val pqCodes = Standing.declare[Unit, DataFrame](
+      "pq-codes", "embeddings") { (s, d, _) =>
+    pqEncode(embL(s, d), Standing.get(pqCodebook, s, d)).localCheckpoint()
+  }
 
-  /** Fresh full-corpus encode, recorded — the t44 builder entry. */
-  private def pqEncRecord(s: SparkSession, d: String,
-      emb: DataFrame): DataFrame =
-    pqEncMemo.record((s, d), embStamp(d),
-      pqEncode(emb, pqCodebook(s, d, emb)).localCheckpoint())
-
-  /** The composing-gate entry for the long-form codes. */
-  private def pqEncReused(s: SparkSession, d: String,
-      emb: => DataFrame): DataFrame =
-    pqEncMemo.reuse((s, d), embStamp(d))(pqEncRecord(s, d, emb))
-
-  /** The packed (vec_id, codes) resident form, memoized the same way
-    * (same artifact, serve-side representation). */
-  private def pqPackedReused(s: SparkSession, d: String,
-      emb: => DataFrame): DataFrame =
-    pqPackedMemo.reuse((s, d), embStamp(d)) {
-      pqPackedMemo.record((s, d), embStamp(d),
-        pqPacked(pqEncReused(s, d, emb)).localCheckpoint())
-    }
+  /** The packed (vec_id, codes) resident form of [[pqCodes]] (same
+    * artifact, serve-side representation). */
+  private val pqCodesPacked = Standing.declare[Unit, DataFrame](
+      "pq-codes-packed", "embeddings") { (s, d, _) =>
+    pqPacked(Standing.get(pqCodes, s, d)).localCheckpoint()
+  }
 
   /** (vec_id, sub, sv): each vector split into its M subvectors —
     * row-local `slice`, no shuffle. */
@@ -2217,7 +2166,7 @@ object VectorQueries {
     * error. */
   private[queries] def pqSelfAdc(s: SparkSession, d: String): DataFrame = {
     val emb = embL(s, d)
-    val cb = pqCodebook(s, d, emb)
+    val cb = Standing.get(pqCodebook, s, d)
     val q = emb.filter(col("vec_id") < PqNq)
     val lut = pqSubvecs(q).withColumnRenamed("vec_id", "qid")
       .join(broadcast(cb), "sub")
@@ -2286,8 +2235,7 @@ object VectorQueries {
        |SELECT vec_id, array_to_string(list(cid ORDER BY sub), ',') AS codes,
        |  CAST(SUM(distq) AS BIGINT) AS qerr
        |FROM enc GROUP BY vec_id ORDER BY vec_id""".stripMargin) { (s, d) =>
-    val emb = embL(s, d)
-    pqEncRecord(s, d, emb) // t44 IS the builder: always rebuild+record
+    Standing.rebuild(pqCodes, s, d) // t44 IS the builder
       .groupBy("vec_id")
       .agg(array_join(transform(
           sort_array(collect_list(struct(col("sub"), col("code")))),
@@ -2316,13 +2264,13 @@ object VectorQueries {
        |SELECT qid, rank, nid, adist FROM ranked WHERE rank <= 3
        |ORDER BY qid, rank""".stripMargin) { (s, d) =>
     val emb = embL(s, d)
-    val cb = pqCodebook(s, d, emb)
+    val cb = Standing.get(pqCodebook, s, d)
     val lut = pqSubvecs(emb.filter(col("vec_id") < PqNq))
       .withColumnRenamed("vec_id", "qid")
       .join(broadcast(cb), "sub")
       .select(col("qid"), col("sub"), col("cid"),
         graft.ops.KMeans.distq(col("sv"), col("cL")).as("ldist"))
-    val enc = pqEncReused(s, d, emb) // standing codes (t44's artifact)
+    val enc = Standing.get(pqCodes, s, d) // t44's artifact
     val ad = enc
       .join(broadcast(lut),
         enc("sub") === lut("sub") && enc("code") === lut("cid"))
@@ -2382,11 +2330,11 @@ object VectorQueries {
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"), col("cid"))
     val eL = emb.select(col("vec_id"), col("eL"))
-    val cb = pqCodebook(s, d, eL)
+    val cb = Standing.get(pqCodebook, s, d)
     // standing codes (t44's artifact); explicit renames — the reused
     // checkpoint's column objects would otherwise be ambiguous between
     // consumers in one session
-    val encR = pqEncReused(s, d, eL)
+    val encR = Standing.get(pqCodes, s, d)
       .select(col("vec_id").as("nid"), col("sub").as("esub"),
         col("code").as("ecode"))
     val lut = pqSubvecs(eL.filter(col("vec_id") < PqNq))
@@ -2492,9 +2440,8 @@ object VectorQueries {
     * the ladder measures against the full vector table). */
   private[graft] def pqServeModel(s: SparkSession, d: String,
       queries: DataFrame): (DataFrame, DataFrame) = {
-    val emb = embL(s, d)
-    val cb = pqCodebook(s, d, emb)
-    val enc = pqPackedReused(s, d, emb) // standing codes (t44's artifact)
+    val cb = Standing.get(pqCodebook, s, d)
+    val enc = Standing.get(pqCodesPacked, s, d) // t44's artifact
     val lut = pqSubvecs(queries.select(col("vec_id"),
         scaleL(col("embedding")).as("eL")))
       .withColumnRenamed("vec_id", "qid")
@@ -2570,6 +2517,9 @@ object VectorQueries {
       .localCheckpoint() // query-set rows: broadcast every round
     val lutMeta = lutC.select("k", "mincid", "nsubs", "ncells")
       .distinct().collect()
+    if (lutMeta.isEmpty) // empty query set: nothing to walk
+      return q.limit(0).select(col("qid"), col("qid").as("nid"),
+        lit(0.0).as("cosine"), lit(0L).as("rank"))
     require(lutMeta.length == 1 && lutMeta(0).getLong(1) == 0L &&
       lutMeta(0).getLong(3) == lutMeta(0).getLong(0) * lutMeta(0).getLong(2),
       "packed ADC LUT needs dense per-sub cids 0..k-1, identical across " +
@@ -2707,13 +2657,12 @@ object VectorQueries {
        |SELECT qid AS query_id, CAST(rnk AS BIGINT) AS rank, nid, cosine
        |FROM gfx WHERE rnk <= $ServeK
        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    val e = embCheckpointed(s, d)
-    val g = standingGraphReused(s, d, 12, 4, LshBucketCap, fill = true)
-    val emb = e.select(col("vec_id"), col("eL"))
-    val cb = pqCodebook(s, d, emb)
+    val e = Standing.get(embCorpus, s, d)
+    val g = Standing.get(knnGraph, s, d, FilledGraph)
+    val cb = Standing.get(pqCodebook, s, d)
     // the resident codes — t44's standing artifact, built once per
-    // process per corpus fingerprint, walked often (r21)
-    val enc = pqPackedReused(s, d, emb)
+    // process per corpus, walked often
+    val enc = Standing.get(pqCodesPacked, s, d)
     val queries = e.filter(col("vec_id") < PqNq)
     val lut = pqSubvecs(queries.select(col("vec_id"), col("eL")))
       .withColumnRenamed("vec_id", "qid")
@@ -2729,7 +2678,7 @@ object VectorQueries {
       .orderBy("nid").limit(ServeEntries)
     val out = knnServePqVecs(e, g.select("qid", "nid"), enc, lut, qvecs,
         ents, ServeBeam, ServeRounds, ServeK, routed = Some(routed),
-        corpusRows = Some(embCount(s, d)))
+        corpusRows = Some(Standing.get(embCount, s, d)))
       .select(col("qid").as("query_id"), col("rank"), col("nid"),
         col("cosine"))
       .orderBy("query_id", "rank")

@@ -47,7 +47,8 @@ object ScaleCheck {
     "j7_asof_join", "s6_exact_quantiles", "t28_curation_manifest",
     "t28b_manifest_star", "t32_star_clusters", "t34_rep_dedup",
     "t35_semantic_star",
-    // the parity gates run full+star in one process (memo-composed):
+    // the parity gates run full+star in one process (composed on the
+    // standing cluster frames):
     // at scale factors they MEASURE the star feeds' split cost
     "t33_star_parity", "t36_semantic_star_parity",
     "t37_block_boilerplate", "t38_delta_neardup", "t39_bloom_decontaminate",

@@ -2,12 +2,15 @@ package graft.queries
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 
-/** Pins the Clustering memo's staleness contract: keys carry a content
-  * fingerprint of the backing parquet, so an input dir rewritten
-  * in-process misses the memo and rebuilds instead of serving the old
-  * checkpointed frame. */
+/** Pins the standing-artifact registry's staleness contract: entries
+  * carry a content fingerprint of the backing parquet as their stamp,
+  * so an input dir rewritten in-process rebuilds instead of serving the
+  * old checkpointed frame; and a replaced entry is left to Spark's
+  * cleaner, never released under a frame that still reads it. */
 class MemoInvalidationSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,14 +18,14 @@ class MemoInvalidationSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-memo").toString
     Seq((1L, "alpha")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val f1 = Clustering.fingerprint(dir, "documents")
+    val f1 = Standing.fingerprint(dir, "documents")
     assert(f1.nonEmpty)
     Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val f2 = Clustering.fingerprint(dir, "documents")
+    val f2 = Standing.fingerprint(dir, "documents")
     assert(f1 != f2, "rewriting the table must change the fingerprint")
     // stable when nothing changed
-    assert(f2 == Clustering.fingerprint(dir, "documents"))
+    assert(f2 == Standing.fingerprint(dir, "documents"))
   }
 
   test("winnow fingerprint memo invalidates on corpus rewrite") {
@@ -46,49 +49,55 @@ class MemoInvalidationSpec extends SparkSpec {
   }
 
   test("memo reuses only under a matching stamp; a new stamp rebuilds") {
-    val m = new Clustering.Memo[String]
-    val recorded = spark.range(1).toDF("a")
-    m.record("prefix", "fp-old", recorded)
-    assert(m.reuse("prefix", "fp-old")(sys.error("must not rebuild"))
-      eq recorded)
-    var built = false
-    val fresh = spark.range(2).toDF("a")
-    val got = m.reuse("prefix", "fp-new") { built = true; fresh }
-    assert(built, "a changed stamp (rewritten input) must rebuild")
-    assert(got eq fresh)
-    // an unknown prefix rebuilds too
-    var built2 = false
-    m.reuse("other-prefix", "fp-old") { built2 = true; fresh }
-    assert(built2)
+    val dir = Files.createTempDirectory("graft-stamp").toString
+    def write(n: Int): Unit = spark.range(n).toDF("doc_id")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    var builds = 0
+    val a = Standing.declare[Unit, Int]("spec-stamp", "documents") {
+      (_, _, _) => builds += 1; builds
+    }
+    write(1)
+    val recorded = Standing.get(a, spark, dir)
+    assert(Standing.get(a, spark, dir) === recorded && builds === 1,
+      "a matching stamp must serve the recorded value")
+    write(2)
+    assert(Standing.get(a, spark, dir) === 2,
+      "a changed stamp (rewritten input) must rebuild")
+    // another dir or session is another key: it rebuilds too
+    val other = Files.createTempDirectory("graft-stamp-other").toString
+    assert(Standing.get(a, spark, other) === 3)
+    assert(Standing.get(a, spark.newSession(), dir) === 4)
+    // rebuild always builds, and get then serves what it recorded
+    assert(Standing.rebuild(a, spark, dir) === 5)
+    assert(Standing.get(a, spark, dir) === 5)
   }
 
-  test("re-recording a prefix releases the superseded checkpoint's blocks (ADVICE r14)") {
-    def checkpointRdd(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        case other => fail(s"expected LogicalRDD, got ${other.getClass}")
-      }
-    val m = new Clustering.Memo[String]
-    val old = spark.range(10).toDF("a").localCheckpoint()
-    val oldRdd = checkpointRdd(old)
-    assert(oldRdd.getStorageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE,
-      "localCheckpoint must have persisted its RDD")
-    m.record("prefix", "fp-1", old)
-    // same frame re-recorded: NOT released (record must be idempotent)
-    m.record("prefix", "fp-1", old)
-    assert(oldRdd.getStorageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE)
-    // a replacing record (rewrite OR direct-run re-record) releases it
-    val fresh = spark.range(20).toDF("a").localCheckpoint()
-    m.record("prefix", "fp-2", fresh)
-    assert(oldRdd.getStorageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE,
-      "superseded checkpoint must be unpersisted, not orphaned")
-    // the replacement still serves
-    assert(m.reuse("prefix", "fp-2")(sys.error("must not rebuild"))
-      eq fresh)
-    assert(checkpointRdd(fresh).getStorageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE)
+  test("superseded unreachable checkpoint is reclaimed") {
+    val a = Standing.declare[Unit, DataFrame]("spec-reclaim", "documents") {
+      (s, _, _) => s.range(10).toDF("a").localCheckpoint()
+    }
+    val dir = Files.createTempDirectory("graft-reclaim").toString
+    def cached(id: Int) = spark.sparkContext.getRDDStorageInfo.exists(_.id == id)
+    // the first build goes out of scope here: only the registry held it
+    val goneId = rddId(Standing.rebuild(a, spark, dir))
+    assert(cached(goneId), "localCheckpoint must have persisted its RDD")
+    val held = Standing.rebuild(a, spark, dir)
+    val heldId = rddId(held)
+    assert(goneId != heldId)
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (cached(goneId) && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(!cached(goneId),
+      "the cleaner must free a superseded checkpoint nothing references")
+    assert(cached(heldId), "a referenced checkpoint keeps its blocks")
+    assert(held.count() === 10)
+    assert(Standing.get(a, spark, dir) eq held)
+  }
+
+  private def rddId(df: DataFrame): Int = df.queryExecution.logical match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    case other => fail(s"expected LogicalRDD, got ${other.getClass}")
   }
 }

@@ -458,7 +458,7 @@ class PlanContractSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
     assert(AnyJoin.findAllIn(p).nonEmpty, p)
-    assert(p.contains("ExistingRDD"), p) // the memoized winnow checkpoint
+    assert(p.contains("ExistingRDD"), p) // the standing winnow checkpoint
     assert(!p.contains("Scan parquet"), p) // no second corpus scan
   }
 
@@ -596,7 +596,7 @@ class PlanContractSpec extends SparkSpec {
 
   test("t66 report: rolls checkpointed manifest frames, no cartesian anywhere") {
     val p = finalizedPlan(TextQueries.t66SourceCuration.run(spark, sf))
-    // the cluster side arrives as the memoized star-frame checkpoint
+    // the cluster side arrives as the standing star-frame checkpoint
     assert(p.contains("ExistingRDD"), p)
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)

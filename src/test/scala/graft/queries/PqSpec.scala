@@ -69,4 +69,27 @@ class PqSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"),
       "ADC candidate join must be broadcast")
   }
+
+  test("a held t45 frame still counts after t44 rebuilds the codes") {
+    // a rebuilt standing artifact must not free blocks a live frame reads
+    val held = VectorQueries.t45PqAdcTopk.run(spark, sf)
+    val n = held.count()
+    VectorQueries.t44PqEncode.run(spark, sf).count()
+    assert(held.count() === n)
+  }
+
+  test("PQ serve over an empty query set returns no rows") {
+    val e = VectorQueries.embScaledOf(graft.Tables.embeddings(spark, sf))
+    val none = e.filter(lit(false))
+    val (enc, lut) = VectorQueries.pqServeModel(spark, sf,
+      none.select("vec_id", "embedding"))
+    val qvecs = none.select(col("vec_id").as("qid"), col("eL").as("qL"),
+      col("ss").as("qss"))
+    val edges = e.select(col("vec_id").as("qid"), col("vec_id").as("nid"))
+    val ents = e.select(col("vec_id").as("nid")).orderBy("nid").limit(4)
+    val out = VectorQueries.knnServePqVecs(e, edges, enc, lut, qvecs, ents,
+      8, 2, 3)
+    assert(out.columns.toSeq === Seq("qid", "nid", "cosine", "rank"))
+    assert(out.count() === 0)
+  }
 }

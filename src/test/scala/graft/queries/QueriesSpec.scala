@@ -53,4 +53,39 @@ class QueriesSpec extends SparkSpec {
       graft.Verify.guardScalarOutput("bad3", st.schema)
     }
   }
+
+  /** Each composer of standing artifacts, with the builder queries of
+    * the artifacts it reads: its rows must not depend on whether those
+    * builders already ran in the session. */
+  private val composers = Seq(
+    "t28_curation_manifest" -> Seq("t34_rep_dedup"),
+    "t28b_manifest_star" -> Seq("t32_star_clusters"),
+    "t33_star_parity" -> Seq("t21_dup_clusters", "t32_star_clusters"),
+    "t36_semantic_star_parity" ->
+      Seq("t26_semantic_clusters", "t35_semantic_star"),
+    "t45_pq_adc_topk" -> Seq("t44_pq_encode"),
+    "t46_ivf_pq" -> Seq("t44_pq_encode"),
+    "t47_ivf_pq_refine" -> Seq("t44_pq_encode"),
+    "t51_bpe_segment" -> Seq("t50_bpe_train"),
+    "t61_winnow_pairs" -> Seq("t60_winnowing"),
+    "t61b_winnow_pairs_prod" -> Seq("t60_winnowing"),
+    "t66_source_curation" -> Seq("t32_star_clusters"),
+    "t83_knn_serve" -> Seq("t82_knn_graph"),
+    "t85_routed_serve" -> Seq("t82c_knn_graph_fill"),
+    "t86_graph_delete" -> Seq("t82c_knn_graph_fill"),
+    "t87_pq_serve" -> Seq("t82c_knn_graph_fill", "t44_pq_encode"),
+    "t88_graph_consolidate" -> Seq("t82c_knn_graph_fill"))
+
+  private def rows(name: String, s: org.apache.spark.sql.SparkSession) =
+    SparkEntry.queries(name)(s, sf).collect().map(_.toString).sorted.toSeq
+
+  composers.foreach { case (composer, builders) =>
+    test(s"$composer rows are the same in a fresh session") {
+      builders.foreach(b => SparkEntry.queries(b)(spark, sf).count())
+      val warm = rows(composer, spark)
+      val fresh = rows(composer, spark.newSession())
+      assert(warm.nonEmpty)
+      assert(warm === fresh)
+    }
+  }
 }
